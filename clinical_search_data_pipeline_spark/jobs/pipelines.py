@@ -5,6 +5,14 @@ and wall-clock snapshots; here every endpoint is a parameter and every
 snapshot an `as_of` (SURVEY.md §7.0). Each job returns a small result
 summary so callers/tests can assert without re-reading sinks.
 
+Summaries are taken from the write itself, never from a recount: a
+DataFrame is a lazy plan, so a `count()` after the write re-runs the whole
+uncached lineage it just wrote (§4.3 hazard 1, one layer up). Where a
+snapshot was committed, row counts come from the manifest's footer row
+counts (`manifest.snapshot_row_count` — exact, zero Spark jobs); otherwise,
+and for sums the footer lacks, one `pyspark.sql.Observation` rides the
+write action and is read after it.
+
 Scale posture per job is inherited from the operators it composes:
 partitioned writes stay parallel (no `coalesce(1)` — sinks/parquet.py),
 dedup state is watermark-bounded (streaming/dedup.py), mart pipelines reuse
@@ -17,7 +25,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable, Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from clinical_search_data_pipeline_spark.operators import ingest, marts
@@ -66,15 +74,18 @@ def bronze_archive_job(
 ) -> int:
     """JSON-lines log -> parsed + lineage bronze, partition-appended
     (reference batch_to_archive_raw.py:104-186). Returns rows written this
-    run — counted from the cached parse, not the reference's post-write
-    re-read-and-recount (§4.3 hazard 1)."""
+    run, observed on the append itself (one Spark job, no cache) — not the
+    reference's post-write re-read-and-recount (§4.3 hazard 1). Observed
+    metrics are accumulator-backed, so a stage re-execution after an
+    executor loss can count its rows twice; the plain parquet append has
+    no manifest whose footer counts would be exact."""
     raw = spark.read.text(raw_json_path)  # one row per wire message, col `value`
-    bronze = ingest.bronze_archive(raw, as_of=as_of).cache()
-    try:
-        pq_sink.write_partitioned(bronze, bronze_path, partition_col, mode="append")
-        return bronze.count()
-    finally:
-        bronze.unpersist()
+    obs = Observation()
+    bronze = ingest.bronze_archive(raw, as_of=as_of).observe(
+        obs, F.count(F.lit(1)).alias("rows")
+    )
+    pq_sink.write_partitioned(bronze, bronze_path, partition_col, mode="append")
+    return int(obs.get["rows"])
 
 
 COLD_MART_BUILDERS: Mapping[str, Callable[[DataFrame], DataFrame]] = {
@@ -96,7 +107,11 @@ def mart_etl_job(
     """Silver -> four cold marts, overwrite (reference
     etl_to_analytics_mart.py:57-207). The input is cached across the four
     pipelines instead of the reference's four re-scans + post-write
-    re-counts; counts come from the write-side frames.
+    re-counts. Per-mart row counts ride the write: snapshot publishes read
+    the committed manifest's footer row counts (exact, zero Spark jobs);
+    the plain path observes count(*) on the write action. Observed metrics
+    are accumulator-backed, so a stage re-execution can count its rows
+    twice — which is why the snapshot path prefers the manifest.
 
     ``snapshot=True`` publishes each mart through the manifest-committed
     sink instead of an in-place overwrite: a dashboard racing the nightly
@@ -127,9 +142,6 @@ def mart_etl_job(
             "expectations silently would let a caller believe a quality "
             "gate ran when it did not"
         )
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     events = events.cache()
     written: dict[str, int] = {}
     versions: dict[str, int] = {}
@@ -248,7 +260,13 @@ def mart_etl_incremental_job(
     reference, and the swap commits atomically as one new version — a
     dashboard racing the backfill reads the complete pre- or post-backfill
     mart, and the pre-backfill state stays time-travel pinnable. Pairs
-    with `mart_etl_job(snapshot=True)`'s partitioned publishes."""
+    with `mart_etl_job(snapshot=True)`'s partitioned publishes.
+
+    Returns the rows written into the replaced partitions per mart, taken
+    from the write, never from a rebuild of the mart: the snapshot path
+    sums the committed manifest's footer row counts over the replaced
+    partitions (exact, zero Spark jobs); the plain path observes count(*)
+    on the write action, where a stage re-execution can count twice."""
     scoped = events.filter(F.col(partition_col).isin(list(event_dates))).cache()
     written: dict[str, int] = {}
     versions: dict[str, int] = {}
@@ -257,18 +275,23 @@ def mart_etl_incremental_job(
             mart = build(scoped)
             if partition_col not in mart.columns:
                 continue
+            path = f"{out_dir}/{name}"
             if snapshot:
                 versions[name] = manifest_sink.replace_partitions(
-                    mart,
-                    f"{out_dir}/{name}",
-                    partition_col,
-                    values=list(event_dates),
+                    mart, path, partition_col, values=list(event_dates)
+                )
+                written[name] = _partition_row_count(
+                    path, versions[name], partition_col, event_dates
                 )
             else:
+                obs = Observation()
                 pq_sink.write_partitioned(
-                    mart, f"{out_dir}/{name}", partition_col, mode="overwrite"
+                    mart.observe(obs, F.count(F.lit(1)).alias("rows")),
+                    path,
+                    partition_col,
+                    mode="overwrite",
                 )
-            written[name] = mart.count()
+                written[name] = int(obs.get["rows"])
         if snapshot and versions:
             # The backfill touches only the partitioned marts; the pin
             # carries the untouched marts' previous versions forward so
@@ -320,6 +343,23 @@ def mart_etl_incremental_job(
     return written
 
 
+def _partition_row_count(
+    table: str, version: int, partition_col: str, values
+) -> int:
+    """Rows of committed `version` inside the `partition_col` partitions
+    named by `values`, summed from the manifest's per-file footer row
+    counts — zero Spark jobs. `replace_partitions` stages those files
+    with stats, so every matching entry carries its row count."""
+    wanted = {str(v) for v in values}
+    return sum(
+        int(e["rows"])
+        for e in manifest_sink._entries(
+            manifest_sink._read_manifest(table, version)
+        )
+        if e["partition"].get(partition_col) in wanted
+    )
+
+
 def mart_load_job(
     spark: SparkSession,
     marts_dir: str,
@@ -341,7 +381,12 @@ def mart_load_job(
     manifest's partition/stats pruning, so an incremental serving refresh
     of one event_date opens only that partition's files; columns absent
     from a mart (the global marts carry no event_date) are skipped for
-    that table."""
+    that table.
+
+    Returns the rows shipped per table. A whole-version snapshot load
+    takes them from the pinned version's manifest footer row counts (zero
+    Spark jobs); a ``where``-filtered or plain parquet load counts the
+    frame it shipped."""
     pinned = resolve_mart_versions(spark, marts_dir) if snapshot else None
     loaded: dict[str, int] = {}
     for table in tables:
@@ -364,10 +409,18 @@ def mart_load_job(
             df = manifest_sink.read_snapshot(
                 spark, path, version=version, where=pred
             )
+            # a `where` load re-applies its predicate as a row filter, so
+            # only an unfiltered load ships exactly the version's rows
+            rows = (
+                manifest_sink.snapshot_row_count(path, version)
+                if pred is None
+                else None
+            )
         else:
             df = spark.read.parquet(path)
+            rows = None
         sink(df, table)
-        loaded[table] = df.count()
+        loaded[table] = df.count() if rows is None else rows
     return loaded
 
 
@@ -745,6 +798,13 @@ def training_export_job(
     sink (one atomic version per run): a trainer's dataloader enumerating
     the lake mid-re-export reads the previous complete epoch, never a mix
     of two, and any earlier epoch stays pinnable by version.
+
+    The summary rides the write: one Observation on the written frame
+    carries the row count and `tokens_exported`, read after the write.
+    Observed metrics are accumulator-backed, so a stage re-execution can
+    count twice; the snapshot path therefore takes `docs_exported` from
+    the committed manifest's footer row counts, which are exact, and only
+    the token sum (which the footer lacks) from the Observation.
     """
     from clinical_search_data_pipeline_spark.operators.curation import (
         TOKEN_BUDGET,
@@ -769,29 +829,33 @@ def training_export_job(
         docs.join(F.broadcast(picked.select("doc_id")), "doc_id", "left_semi"),
         seed=seed,
     ).select("doc_id", "order_idx")
+    obs = Observation()
     export = (
         docs.select("doc_id", "lang", "text")
         .join(F.broadcast(picked), "doc_id")
         .join(F.broadcast(ordered), "doc_id")
-    )
-    if snapshot:
-        manifest_sink.write_snapshot(
-            export.repartition(2, "lang"),
-            lake_dir,
-            mode="overwrite",
-            partition_by=["lang"],
+        .repartition(2, "lang")
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("tokens"),
         )
+    )
+    n = None
+    if snapshot:
+        version = manifest_sink.write_snapshot(
+            export, lake_dir, mode="overwrite", partition_by=["lang"]
+        )
+        n = manifest_sink.snapshot_row_count(lake_dir, version)
     else:
         pq_sink.write_partitioned(
-            export,
-            lake_dir,
-            partition_col="lang",
-            mode="overwrite",
-            target_files_per_partition=2,
+            export, lake_dir, partition_col="lang", mode="overwrite"
         )
-    n = export.count()
-    toks = export.agg(F.sum("n_tokens")).collect()[0][0] or 0
-    return {"docs_exported": n, "tokens_exported": int(toks)}
+    got = obs.get
+    return {
+        "docs_exported": int(got["rows"]) if n is None else n,
+        "tokens_exported": int(got["tokens"]),
+    }
 
 
 # The eight gate indexes as persisted lake artifacts: ten component
@@ -1223,8 +1287,10 @@ def ingest_admission_job(
     joined on doc_id into a single verdict row per incoming document.
 
     `out_dir` must not already exist: verdicts are appended per micro-batch
-    and the summary is computed by reading the sink back, so replaying into
-    a populated directory would silently double-count every document.
+    and the summary is computed by reading the sink back (screened and
+    admitted in ONE aggregation; `snapshot_rows` from the admitted lake's
+    manifest footer row counts, no scan), so replaying into a populated
+    directory would silently double-count every document.
 
     `snapshot_table` (optional) additionally publishes each micro-batch's
     ADMITTED documents to a manifest-committed snapshot table
@@ -1577,17 +1643,24 @@ def ingest_admission_job(
         # zero micro-batches fired (empty staging source): nothing was
         # appended, so there is no sink to read back
         return {"docs_screened": 0, "docs_admitted": 0}
-    out = spark.read.parquet(out_dir)
-    n = out.count()
-    n_adm = out.filter("admitted").count()
-    summary = {"docs_screened": n, "docs_admitted": n_adm}
+    counts = spark.read.parquet(out_dir).agg(
+        F.count(F.lit(1)).alias("screened"),
+        F.count(F.when(F.col("admitted"), 1)).alias("admitted"),
+    ).collect()[0]
+    summary = {
+        "docs_screened": int(counts["screened"]),
+        "docs_admitted": int(counts["admitted"]),
+    }
     if snapshot_table is not None:
         versions = manifest_sink.snapshots(snapshot_table)
         summary["snapshot_versions"] = len(versions)
+        rows = (
+            manifest_sink.snapshot_row_count(snapshot_table) if versions else 0
+        )
         summary["snapshot_rows"] = (
             manifest_sink.read_snapshot(spark, snapshot_table).count()
-            if versions
-            else 0
+            if rows is None
+            else rows
         )
     if refresh_every is not None:
         summary["index_refreshes"] = state["refreshes"]

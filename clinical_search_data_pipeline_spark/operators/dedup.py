@@ -565,6 +565,13 @@ def minhash_recall(
     shingled once). The `possible` scalar rides a broadcast equi-join on a
     constant key — no BroadcastNestedLoop.
     """
+    fine_bands, fine_rows = MINHASH_RECALL_CONFIGS[0]
+    if num_hashes != fine_bands:
+        raise ValueError(
+            f"minhash_recall needs num_hashes == {fine_bands}: the finest "
+            f"config {MINHASH_RECALL_CONFIGS[0]} bands one hash per band "
+            f"and every coarser config nests inside it (got {num_hashes})"
+        )
     spark = docs.sparkSession
     sets = engine_cache(shingle_sets(docs, k).hint("rebalance"))
     # Signature as a NARROW pass (r14, guide §2.4 "remove shuffles
@@ -600,8 +607,6 @@ def minhash_recall(
         .select("doc_id", *sig_cols)
         .hint("rebalance")
     )
-    fine_bands, fine_rows = MINHASH_RECALL_CONFIGS[0]
-    assert fine_rows == 1 and fine_bands == num_hashes
     frames = [
         sig.select(
             "doc_id",

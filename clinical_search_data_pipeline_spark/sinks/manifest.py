@@ -204,7 +204,10 @@ def _enforce_expectations(
     how null keys reach serving — stricter than SQL CHECK on purpose).
 
     ``on_violation='fail'``: any violation raises ExpectationViolation
-    BEFORE anything is staged — the previous version stays live.
+    before anything is committed — the previous version stays live. This
+    pinned gate raises before staging; `write_snapshot`'s observe fast
+    path stages first and deletes the never-committed stage directory
+    before raising.
     ``'quarantine'``: violating rows are appended to the sibling
     ``<table>__quarantine`` snapshot table (with a `_violations` array
     naming the failed expectations and a `_quarantined_at` stamp), the

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -75,3 +76,37 @@ def commit_backend(request):
 
         with m.commit_store(MemoryCommitStore()):
             yield request.param
+
+
+@pytest.fixture
+def spark_jobs_after(spark, monkeypatch):
+    """``spark_jobs_after(module, name, job)`` runs ``job()`` with
+    ``module.name`` (a job's sink call) patched so that, once the real call
+    returns, a fresh Spark job group is set on the calling thread; returns
+    ``(job's result, ids of the Spark jobs launched in that group)``. A
+    job that takes its summary from the write reports no ids, so a
+    reintroduced post-write ``count()`` — which re-runs the lineage just
+    written — fails the caller's assertion."""
+    sc = spark.sparkContext
+
+    def run(module, name, job):
+        group = f"after-{name}-{uuid.uuid4().hex}"
+        real = getattr(module, name)
+
+        def patched(*args, **kwargs):
+            out = real(*args, **kwargs)
+            sc.setJobGroup(group, f"Spark jobs after {name} returned")
+            return out
+
+        with monkeypatch.context() as mp:
+            mp.setattr(module, name, patched)
+            try:
+                result = job()
+            finally:
+                for key in ("spark.jobGroup.id", "spark.job.description"):
+                    sc.setLocalProperty(key, None)
+        # job-start events reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

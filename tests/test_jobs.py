@@ -39,14 +39,22 @@ def test_silver_streaming_job(spark, tmp_path):
     assert per_part and all(n == 1 for n in per_part.values())
 
 
-def test_bronze_archive_job(spark, tmp_path):
+def test_bronze_archive_job(spark, tmp_path, spark_jobs_after):
     raw_dir = stage_click_log(spark, SF_SMOKE)  # JSON-lines wire staging
     bronze = str(tmp_path / "bronze")
     n_events = load_events(spark, SF_SMOKE).count()
     n1 = pipelines.bronze_archive_job(spark, raw_dir, bronze, as_of="2024-01-31 00:00:00")
     assert n1 == n_events
-    # append semantics: a second run doubles the lake but reports per-run rows
-    n2 = pipelines.bronze_archive_job(spark, raw_dir, bronze, as_of="2024-02-01 00:00:00")
+    # append semantics: a second run doubles the lake but reports per-run
+    # rows — observed on the append, so no Spark job runs after it
+    n2, after = spark_jobs_after(
+        pipelines.pq_sink,
+        "write_partitioned",
+        lambda: pipelines.bronze_archive_job(
+            spark, raw_dir, bronze, as_of="2024-02-01 00:00:00"
+        ),
+    )
+    assert after == []
     assert n2 == n_events
     assert spark.read.parquet(bronze).count() == 2 * n_events
     assert set(spark.read.parquet(bronze).select("ingestion_type").distinct().toPandas()["ingestion_type"]) == {"batch"}
@@ -91,6 +99,12 @@ def test_mart_etl_incremental_touches_only_target_partitions(spark, tmp_path):
     }
     written = pipelines.mart_etl_incremental_job(events, out, (target,))
     assert written and all(n > 0 for n in written.values())
+    # the returned counts are the replaced partitions' rows
+    for name, n in written.items():
+        replaced = spark.read.parquet(f"{out}/{name}").filter(
+            F.col("event_date") == target
+        )
+        assert replaced.count() == n, name
     after = {
         d: sorted(os.listdir(os.path.join(mart_dir, d)))
         for d in os.listdir(mart_dir)
@@ -280,6 +294,7 @@ def test_training_export_job_deterministic_and_within_budget(spark, tmp_path):
     out = spark.read.parquet(lake)
     n = out.count()
     assert n == summary["docs_exported"]
+    assert out.agg(F.sum("n_tokens")).collect()[0][0] == summary["tokens_exported"]
     # per-lang budget respected (sum of exported tokens per lang <= budget)
     for r in out.groupBy("lang").agg(F.sum("n_tokens").alias("t")).collect():
         assert r["t"] <= TOKEN_BUDGET, (r["lang"], r["t"])
@@ -637,24 +652,35 @@ def test_mart_etl_snapshot_publish_and_load(spark, tmp_path):
         assert pruned_frames[t].count() == written[t], t
 
 
-def test_training_export_snapshot_epochs(spark, tmp_path):
+def test_training_export_snapshot_epochs(spark, tmp_path, spark_jobs_after):
     """snapshot=True publishes each export run as one atomic version: two
     epochs (different seeds) land as v1/v2, the latest equals the seed-2
-    export, and epoch 1 stays pinnable with its own ordering."""
+    export, and epoch 1 stays pinnable with its own ordering. The summary
+    comes from the publish (manifest row counts + the write's observed
+    token sum): no Spark job runs after `write_snapshot` returns."""
     from clinical_search_data_pipeline_spark.sinks import manifest as m
 
     lake = str(tmp_path / "lake")
     s1 = pipelines.training_export_job(
         spark, SF_SMOKE, lake, token_budget=2000, seed="epoch0", snapshot=True
     )
-    s2 = pipelines.training_export_job(
-        spark, SF_SMOKE, lake, token_budget=2000, seed="epoch1", snapshot=True
+    s2, after = spark_jobs_after(
+        pipelines.manifest_sink,
+        "write_snapshot",
+        lambda: pipelines.training_export_job(
+            spark, SF_SMOKE, lake, token_budget=2000, seed="epoch1",
+            snapshot=True,
+        ),
     )
+    assert after == []
     assert [s["version"] for s in m.snapshots(lake)] == [1, 2]
     latest = m.read_snapshot(spark, lake)
     assert latest.count() == s2["docs_exported"] > 0
     v1 = m.read_snapshot(spark, lake, version=1)
     assert v1.count() == s1["docs_exported"] > 0
+    for df, summary in ((latest, s2), (v1, s1)):
+        toks = df.agg(F.sum("n_tokens")).collect()[0][0]
+        assert toks == summary["tokens_exported"] > 0
     # different seeds draw different budget prefixes/orders: the two
     # pinned epochs differ while each stays internally consistent
     k1 = {(r.doc_id, r.order_idx) for r in v1.collect()}
@@ -842,6 +868,8 @@ def test_mart_incremental_snapshot_backfill(spark, tmp_path):
         assert sorted(map(tuple, got.select(cols).collect())) == sorted(
             map(tuple, full.select(cols).collect())
         )
+        # the returned count is the replaced partition's committed rows
+        assert got.count() == written[name], name
         # pre-backfill state pinnable
         assert m.read_snapshot(spark, table, version=1).count() > 0
 

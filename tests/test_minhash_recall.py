@@ -6,6 +6,8 @@ test_ann_recall pins the ANN curve."""
 
 from __future__ import annotations
 
+import pytest
+
 from clinical_search_data_pipeline_spark.operators.dedup import (
     MINHASH_RECALL_CONFIGS,
     minhash_recall,
@@ -49,3 +51,13 @@ def test_fixture_recall_floor(spark):
     basis-points drop before anything else turns red."""
     rows = _rows(spark)
     assert rows[(4, 2)]["recall_bp"] >= 9900
+
+
+def test_non_default_num_hashes_rejected(spark):
+    """Only the finest config's banding runs, so the signature width is
+    fixed by it: any other num_hashes is refused up front with a
+    ValueError, which `python -O` does not strip the way it strips an
+    assert."""
+    docs = read_table(spark, SF_SMOKE, "documents")
+    with pytest.raises(ValueError, match="num_hashes == 8"):
+        minhash_recall(docs, num_hashes=4)
